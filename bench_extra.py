@@ -1,100 +1,29 @@
 """Extra benchmarks for optimization work (bench.py is FROZEN for
 measurement — this file carries the guide §1.4 isolation runs).
 
-Modes (first CLI arg):
+Usage:
 
-  pipeline [cores] [--cc0] [--runs N]
-      One ER-pipeline leg in a fresh-JVM subprocess exactly like
-      bench.py's timed region (same warmup, same checkpoint layout,
-      shuffle_partitions=16), printing per-stage TIMING lines plus the
-      deterministic cluster checksum so an optimized tree can prove the
-      published clusters are bit-identical to the baseline's.
-
-  queries [name,...] [--runs N]
+  python bench_extra.py queries [name,...] [--runs N] [--plans SUFFIX]
       Times the bench.py operator queries (count() like the frozen
-      harness) and writes .explain("formatted") for each to
-      plans/r06/<name>_current.txt.
+      harness) and, with --plans, writes .explain("formatted") for each
+      to plans/r06/<name>_<SUFFIX>.txt.
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
+
+Per-stage pipeline numbers and the published-cluster checksum come from
+``python3 perfbench/run.py --workload hot_block --seed 42 --seconds 5 --trace 1``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-
-_PIPE_SNIPPET = """
-import sys, time, json, shutil
-sys.path.insert(0, {repo!r})
-from yams_spark.session import get_spark
-from yams_spark.plans.er_pipeline import run_pipeline, PipelineConfig
-from pyspark.sql import functions as F
-cores = {cores}
-spark = get_spark(app_name="bench_extra", master=f"local[{{cores}}]",
-                  shuffle_partitions=16)
-def _wf(it):
-    for pdf in it:
-        yield pdf
-spark.range(0, 10000, 1, 2 * cores).mapInPandas(_wf, "id long").groupBy(
-    (F.col("id") % 7).alias("k")).count().collect()
-pages = spark.read.parquet({pages_path!r})
-n_pages = pages.count()
-ckpt = f"/dev/shm/yams_extra_ckpt_{{cores}}"
-shutil.rmtree(ckpt, ignore_errors=True)
-t0 = time.time()
-out = run_pipeline(spark, pages, PipelineConfig(
-    checkpoint_dir=ckpt, driver_cc_max_edges={cc_max_edges}))
-n_clusters = out["clusters"].count()
-n_members = out["members"].count()
-wall = time.time() - t0
-chk = out["clusters"].agg(F.coalesce(F.expr(
-    "bit_xor(xxhash64(group_key, canonical_url, member_count))"),
-    F.lit(0)).alias("c")).collect()[0]["c"]
-print("EXTRA_RESULT " + json.dumps({{
-    "wall": round(wall, 3), "pages": n_pages, "clusters": n_clusters,
-    "members": n_members, "clusters_checksum": chk,
-    "cc_stats": out.get("cc_stats")}}))
-spark.stop()
-"""
-
-
-def run_pipeline_leg(cores: int, cc_max_edges: int = -1) -> dict:
-    pages_path = os.environ.get(
-        "YAMS_EXTRA_PAGES", "/tmp/yams_bench_pages_sf0.1_r64/pages.parquet"
-    )
-    env = dict(os.environ)
-    env.setdefault("OMP_NUM_THREADS", "1")
-    env.setdefault("OPENBLAS_NUM_THREADS", "1")
-    env.setdefault("YAMS_DRIVER_MEMORY", "32g")
-    env.setdefault("YAMS_TIMING", "1")
-    os.makedirs("/dev/shm/yams_spark_local", exist_ok=True)
-    env.setdefault("YAMS_SPARK_LOCAL_DIR", "/dev/shm/yams_spark_local")
-    code = _PIPE_SNIPPET.format(
-        repo=_REPO, cores=cores, pages_path=pages_path, cc_max_edges=cc_max_edges
-    )
-    proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, env=env
-    )
-    with open(f"/tmp/yams_extra_stderr_{cores}.log", "w") as f:
-        f.write(proc.stderr)
-    result = {}
-    for line in proc.stdout.splitlines():
-        if line.startswith("TIMING "):
-            print(line, flush=True)
-        elif line.startswith("EXTRA_RESULT "):
-            result = json.loads(line[len("EXTRA_RESULT "):])
-    if not result:
-        print(proc.stderr[-3000:], file=sys.stderr)
-        raise RuntimeError(f"pipeline leg (cores={cores}) failed")
-    return result
-
 
 QUERY_NAMES = [
     "q06_topk_per_group", "q09_term_stats", "q11_bm25", "q12_fusion_rrf",
@@ -137,23 +66,9 @@ def run_queries(names: list[str], runs: int, plan_suffix: str) -> dict:
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "pipeline"
+    mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     args = sys.argv[2:]
-    if mode == "pipeline":
-        cores = int(args[0]) if args and not args[0].startswith("--") else int(
-            os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        cc0 = "--cc0" in args
-        runs = 1
-        if "--runs" in args:
-            runs = int(args[args.index("--runs") + 1])
-        best = None
-        for _ in range(runs):
-            r = run_pipeline_leg(cores, cc_max_edges=0 if cc0 else -1)
-            print("LEG " + json.dumps(r), flush=True)
-            if best is None or r["wall"] < best["wall"]:
-                best = r
-        print("BEST " + json.dumps(best))
-    elif mode == "queries":
+    if mode == "queries":
         names = QUERY_NAMES
         runs = 2
         plan_suffix = ""

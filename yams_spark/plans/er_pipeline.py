@@ -5,24 +5,40 @@ Stage DAG (mirrors the reference ingest→dedupe dataflow, SURVEY.md §3.1/§3.3
 
     extract+sign → block → (salt) → pair → score → cluster → publish
 
-Every stage is a pure function of its input table. When a ``checkpoint_dir``
-is given, each stage writes its output parquet plus a watermark row to the
-metrics table; a rerun skips any stage whose watermark + output already
-exist (idempotent resume — the WAL/recovery analog of wal_manager.h:23-80,
+Every stage is a pure function of its input table and runs through one
+stage runner. When a ``checkpoint_dir`` is given, each stage commits its
+output parquet and then a watermark file holding a fingerprint of the
+config, chained through the previous stage's watermark. A rerun skips a
+stage only when its output exists and its watermark matches, so a changed
+config or a recomputed upstream stage recomputes that stage and every later
+one (idempotent resume — the WAL/recovery analog of wal_manager.h:23-80,
 done the Spark way via durable table commits).
+
+Lineage comes from what Spark already measured, at no extra scan: the
+per-partition rows are the commit write's own tasks (one row per task that
+wrote rows, ``rows_out`` = its ``recordsWritten`` from the status store),
+and the score histogram is an ``Observation`` on the score write. A run's
+lineage rows are appended to ``metrics.parquet`` once, at the end of the
+run.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import hashlib
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 from yams_spark.functions.chunker import PAGE_CHUNKING, ChunkingConfig
 from yams_spark.operators.blocking import (
@@ -43,6 +59,14 @@ METRICS_SCHEMA = (
     "pair_count long, score_histogram array<long>, rows_in long, "
     "rows_out long, watermark_ts timestamp"
 )
+
+#: stages cached when nothing is checkpointed: several consumers read each
+#: of them, and without a durable commit the extraction UDF (sign) or the
+#: key explode + salting join (block) would rerun once per consumer
+_PERSIST_UNCHECKPOINTED = {"sign", "block", "score"}
+
+#: score histogram bins over [0, 1]; the last bin also takes score 1.0
+_SCORE_BINS = 20
 
 
 @dataclass
@@ -112,127 +136,125 @@ def _watermark_path(cfg: PipelineConfig, stage: str) -> str:
     return os.path.join(cfg.checkpoint_dir, f"{stage}.watermark.json")
 
 
-def _stage_done(cfg: PipelineConfig, stage: str) -> bool:
-    return (
-        cfg.checkpoint_dir is not None
-        and os.path.exists(_stage_path(cfg, stage))
-        and os.path.exists(_watermark_path(cfg, stage))
-    )
+def _config_fingerprint(cfg: PipelineConfig, precomputed_embeddings: bool) -> str:
+    """Hash of every config field but ``run_id`` and ``checkpoint_dir``.
+
+    Equal configs hash equal in every process. A callable with no stable
+    module-level name (a lambda, closure or partial) hashes by its repr,
+    which carries its identity, so stages built with it are reused only
+    within the process that built them.
+    """
+
+    def stable(o):
+        name = getattr(o, "__qualname__", "")
+        return f"{o.__module__}.{name}" if name and "<" not in name else repr(o)
+
+    fields = {f.name: getattr(cfg, f.name) for f in dataclasses.fields(cfg)}
+    del fields["run_id"], fields["checkpoint_dir"]
+    fields["precomputed_embeddings"] = precomputed_embeddings
+    blob = json.dumps(fields, sort_keys=True, default=stable)
+    return hashlib.sha256(blob.encode()).hexdigest()
+
+
+def _stage_done(cfg: PipelineConfig, stage: str, fingerprint: str) -> dict | None:
+    """The stage's watermark if its output exists and the fingerprint matches."""
+    if cfg.checkpoint_dir is None or not os.path.exists(_stage_path(cfg, stage)):
+        return None
+    try:
+        with open(_watermark_path(cfg, stage)) as f:
+            mark = json.load(f)
+    except (OSError, ValueError):
+        return None
+    return mark if mark.get("fingerprint") == fingerprint else None
+
+
+def _write_watermark(cfg: PipelineConfig, stage: str, fingerprint: str, schema: StructType) -> dict:
+    """Mark the stage committed; its schema lets a reuse skip inference."""
+    mark = {
+        "run_id": cfg.run_id,
+        "stage": stage,
+        "fingerprint": fingerprint,
+        "schema": schema.jsonValue(),
+        "watermark_ts": datetime.now(timezone.utc).isoformat(),
+    }
+    path = _watermark_path(cfg, stage)
+    with open(path + ".tmp", "w") as f:
+        json.dump(mark, f)
+    os.replace(path + ".tmp", path)
+    return mark
+
+
+def _job_tag(cfg: PipelineConfig, stage: str) -> str:
+    return f"yams-{cfg.run_id}-{stage}"
 
 
 def _commit_stage(
     spark: SparkSession, cfg: PipelineConfig, stage: str, df: DataFrame
 ) -> DataFrame:
-    """Write stage output + watermark; return the durable re-read DataFrame."""
-    if cfg.checkpoint_dir is None:
-        return df
+    """Overwrite the stage's parquet; return the durable re-read DataFrame.
+
+    The old watermark is removed first, so a crash mid-write leaves none
+    and the next run recomputes the stage; the runner writes the new one
+    after the write succeeds. The write's jobs carry ``_job_tag(cfg, stage)``
+    so that its tasks can be found in the status store.
+    """
     path = _stage_path(cfg, stage)
-    df.write.mode("overwrite").parquet(path)
-    with open(_watermark_path(cfg, stage), "w") as f:
-        json.dump(
-            {
-                "run_id": cfg.run_id,
-                "stage": stage,
-                "watermark_ts": datetime.now(timezone.utc).isoformat(),
-            },
-            f,
-        )
+    if os.path.exists(_watermark_path(cfg, stage)):
+        os.remove(_watermark_path(cfg, stage))
+    sc = spark.sparkContext
+    tag = _job_tag(cfg, stage)
+    sc.addJobTag(tag)
+    try:
+        df.write.mode("overwrite").parquet(path)
+    finally:
+        sc.removeJobTag(tag)
     return spark.read.parquet(path)
 
 
-def _partition_metrics(df: DataFrame, run_id: str, stage: str) -> DataFrame:
-    """Per-partition lineage rows (rows_out per partition + watermark)."""
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows_out"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id"),
-            F.lit(None).cast("string").alias("block_id"),
-            F.lit(None).cast("long").alias("pair_count"),
-            F.lit(None).cast("array<long>").alias("score_histogram"),
-            F.lit(None).cast("long").alias("rows_in"),
-            F.col("rows_out").cast("long"),
-            F.current_timestamp().alias("watermark_ts"),
-        )
-    )
+def _write_task_counts(spark: SparkSession, tag: str) -> list[tuple[int, int]]:
+    """(partition id, records written) of each task that wrote rows in the
+    final stage of the last job tagged ``tag``, from the status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    job_ids = list(jsc.statusTracker().getJobIdsForTag(tag))
+    if not job_ids:
+        return []
+    store = jsc.statusStore()
+    stage_ids = store.job(max(job_ids)).stageIds()
+    sid = max(stage_ids.apply(i) for i in range(stage_ids.size()))
+    tasks = store.taskList(sid, store.lastStageAttempt(sid).attemptId(), 2**31 - 1)
+    counts = []
+    for i in range(tasks.size()):
+        task = tasks.apply(i)
+        metrics = task.taskMetrics()
+        if task.status() != "SUCCESS" or not metrics.isDefined():
+            continue
+        written = metrics.get().outputMetrics().recordsWritten()
+        if written > 0:
+            counts.append((task.partitionId(), written))
+    return sorted(counts)
 
 
-def _score_histogram_metrics(scored: DataFrame, run_id: str) -> DataFrame:
-    """20-bin histogram of pair scores over [0,1] as a lineage row.
-
-    One job: the 20 bin counts are collected (tiny) and the row is built
-    driver-side — the total is the bin sum, not a second full count()
-    action over the scored table.
-    """
-    counts = (
-        scored.withColumn(
-            "bin", F.least(F.floor(F.col("pair_score") * 20).cast("int"), F.lit(19))
-        )
-        .groupBy("bin")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    )
-    bins = {r["bin"]: r["c"] for r in counts}
-    hist = [int(bins.get(i, 0)) for i in range(20)]
-    total = sum(hist)
-    return scored.sparkSession.createDataFrame(
-        [(run_id, "score", -1, None, total, hist, None, total)],
-        (
-            "run_id string, stage string, partition_id int, block_id string, "
-            "pair_count long, score_histogram array<long>, rows_in long, "
-            "rows_out long"
-        ),
-    ).withColumn("watermark_ts", F.current_timestamp())
+def _lineage_row(
+    cfg: PipelineConfig, stage: str, partition_id: int = -1, block_id: str | None = None,
+    pair_count: int | None = None, score_histogram: list[int] | None = None,
+    rows_in: int | None = None, rows_out: int | None = None,
+) -> tuple:
+    """One ``METRICS_SCHEMA`` row, stamped now."""
+    return (cfg.run_id, stage, partition_id, block_id, pair_count,
+            score_histogram, rows_in, rows_out, datetime.now(timezone.utc))
 
 
-def _append_metrics(cfg: PipelineConfig, metrics: DataFrame) -> None:
-    if cfg.checkpoint_dir is None:
-        return
-    metrics.write.mode("append").parquet(os.path.join(cfg.checkpoint_dir, "metrics.parquet"))
-
-
-class _MetricsPump:
-    """Run lineage-metrics side jobs on ONE background thread (guide §2.6:
-    overlap independent jobs) so stage-N metrics scans back-fill the cores
-    while stage N+1 computes, instead of serializing ~6 extra Spark jobs
-    onto the critical path. A single worker keeps the parquet appends to
-    metrics.parquet strictly ordered; ``join()`` re-raises any failure and
-    must be called before the metrics table is read."""
-
-    def __init__(self) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._pool = ThreadPoolExecutor(max_workers=1)
-        self._futures: list = []
-
-    def submit(self, fn) -> None:
-        self._futures.append(self._pool.submit(fn))
-
-    def join(self) -> None:
-        for f in self._futures:
-            f.result()
-        self._futures.clear()
-
-    def close(self) -> None:
-        self.join()
-        self._pool.shutdown()
-
-
-def _stage_timer():
-    """Env-gated per-stage wall-clock tracing (YAMS_TIMING=1): prints
-    'TIMING <stage> <sec>' lines for bench forensics; no-op otherwise."""
-    if os.environ.get("YAMS_TIMING") != "1":
-        return lambda _stage: None
-    state = {"t": time.time()}
-
-    def mark(stage: str) -> None:
-        now = time.time()
-        print(f"TIMING {stage} {now - state['t']:.2f}", flush=True)
-        state["t"] = now
-
-    return mark
+def _append_lineage(path: str, rows: list[tuple]) -> None:
+    """Append rows to the metrics table as one parquet file written on the
+    driver (a run's few rows need no Spark job); the file takes its final
+    name only once it is complete."""
+    schema = to_arrow_schema(DataType.fromDDL(METRICS_SCHEMA))
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, os.path.join(path, f".{name}.tmp"))
+    os.replace(os.path.join(path, f".{name}.tmp"), os.path.join(path, name))
 
 
 def run_pipeline(
@@ -254,7 +276,6 @@ def run_pipeline(
     """
     cfg = cfg or PipelineConfig()
     out: dict[str, DataFrame] = {}
-    mark = _stage_timer()
 
     # A small-file input (one parquet split) would serialize the extraction
     # UDF; at 100TB there are plenty of splits and this no-ops. File count
@@ -281,169 +302,135 @@ def run_pipeline(
     if 0 < cur_parts < 2 * par:
         spark.conf.set("spark.sql.shuffle.partitions", str(2 * par))
 
-    pump = _MetricsPump()
+    lineage: list[tuple] = []
+    # lineage a stage's build adds once its commit has run: thunks -> rows
+    later: list = []
+    # what the next stage's fingerprint chains from: the config, then each
+    # committed or reused stage's watermark in turn
+    upstream = _config_fingerprint(cfg, precomputed_embeddings is not None)
+
+    def _run_stage(stage: str, build) -> DataFrame:
+        """Reuse the stage if its output and a matching watermark exist;
+        otherwise build it, commit it and record its write tasks."""
+        nonlocal upstream
+        fingerprint = hashlib.sha256(f"{upstream}\n{stage}".encode()).hexdigest()
+        mark = _stage_done(cfg, stage, fingerprint)
+        if mark is not None:
+            upstream = json.dumps(mark, sort_keys=True)
+            return spark.read.schema(StructType.fromJson(mark["schema"])).parquet(
+                _stage_path(cfg, stage))
+        df = build()
+        if cfg.checkpoint_dir is None:
+            return df.persist() if stage in _PERSIST_UNCHECKPOINTED else df
+        df = _commit_stage(spark, cfg, stage, df)
+        lineage.extend(
+            _lineage_row(cfg, stage, partition_id=p, rows_out=n)
+            for p, n in _write_task_counts(spark, _job_tag(cfg, stage))
+        )
+        mark = _write_watermark(cfg, stage, fingerprint, df.schema)
+        upstream = json.dumps(mark, sort_keys=True)
+        return df
 
     # --- sign (extract + signatures; narrow, no shuffle) ---
-    if _stage_done(cfg, "sign"):
-        signatures = spark.read.parquet(_stage_path(cfg, "sign"))
-    else:
+    def build_sign() -> DataFrame:
         signatures = signatures_stage(pages, cfg.chunk_cfg, embed_fn=cfg.embed_fn)
-        if precomputed_embeddings is not None:
-            pre = precomputed_embeddings.select(
-                "url", F.col("embedding").alias("_pre_embedding")
-            )
-            signatures = (
-                signatures.join(pre, "url", "left")
-                .withColumn(
-                    "embedding",
-                    F.coalesce(F.col("_pre_embedding"), F.col("embedding")),
-                )
-                .drop("_pre_embedding")
-            )
-        if cfg.checkpoint_dir is None:
-            # several downstream branches (blocks, pair-feature joins,
-            # cluster windows) would otherwise re-run the extraction UDF
-            signatures = signatures.persist()
-        signatures = _commit_stage(spark, cfg, "sign", signatures)
-        pump.submit(lambda df=signatures: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "sign")))
-    out["signatures"] = signatures
-    mark("sign")
+        if precomputed_embeddings is None:
+            return signatures
+        pre = precomputed_embeddings.select("url", F.col("embedding").alias("_pre_embedding"))
+        return (
+            signatures.join(pre, "url", "left")
+            .withColumn("embedding", F.coalesce(F.col("_pre_embedding"), F.col("embedding")))
+            .drop("_pre_embedding")
+        )
+
+    signatures = out["signatures"] = _run_stage("sign", build_sign)
 
     # --- optional KG population (PostIngestQueue stage position) ---
     if cfg.build_kg:
         from yams_spark.operators.kg import populate_kg
 
-        kg_docs = signatures.select(
-            F.xxhash64("url").alias("doc_id"),
-            F.col("extracted_text").alias("text"),
-        )
         kg = populate_kg(
-            kg_docs,
-            pagerank_iters=cfg.kg_pagerank_iters,
-            doc_embeddings=signatures.select(
-                F.xxhash64("url").alias("vec_id"), "embedding"
+            signatures.select(
+                F.xxhash64("url").alias("doc_id"), F.col("extracted_text").alias("text")
             ),
+            pagerank_iters=cfg.kg_pagerank_iters,
+            doc_embeddings=signatures.select(F.xxhash64("url").alias("vec_id"), "embedding"),
         )
         for name, df in kg.items():
-            if _stage_done(cfg, name):
-                out[name] = spark.read.parquet(_stage_path(cfg, name))
-            else:
-                out[name] = _commit_stage(spark, cfg, name, df)
-                pump.submit(lambda d=out[name], n=name: _append_metrics(
-                    cfg, _partition_metrics(d, cfg.run_id, n)))
-        mark("kg")
+            out[name] = _run_stage(name, lambda df=df: df)
 
     # --- block (+salting report) ---
-    if _stage_done(cfg, "block"):
-        blocks = spark.read.parquet(_stage_path(cfg, "block"))
-    else:
-        raw_blocks = blocks_stage(signatures, cfg.families)
-        blocks, oversize = salt_blocks(raw_blocks, cfg.block_cap)
-        if cfg.checkpoint_dir is None:
-            # the pair stage re-aggregates blocks; without a durable commit
-            # the key explode + salting join would be recomputed per consumer
-            blocks = blocks.persist()
-        blocks = _commit_stage(spark, cfg, "block", blocks)
-        pump.submit(lambda df=blocks: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "block")))
-        if cfg.checkpoint_dir is not None:
-            oversize_rows = oversize.select(
-                F.lit(cfg.run_id).alias("run_id"),
-                F.lit("block_oversize").alias("stage"),
-                F.lit(-1).alias("partition_id"),
-                F.col("block_key").alias("block_id"),
-                F.col("dropped_pairs_upper_bound").alias("pair_count"),
-                F.lit(None).cast("array<long>").alias("score_histogram"),
-                F.col("block_size").cast("long").alias("rows_in"),
-                F.col("n_salt").cast("long").alias("rows_out"),
-                F.current_timestamp().alias("watermark_ts"),
-            )
-            pump.submit(lambda df=oversize_rows: _append_metrics(cfg, df))
-    out["blocks"] = blocks
-    mark("block")
+    def build_block() -> DataFrame:
+        blocks, oversize = salt_blocks(blocks_stage(signatures, cfg.families), cfg.block_cap)
+        later.append(lambda: [
+            _lineage_row(cfg, "block_oversize", block_id=r["block_key"],
+                         pair_count=r["dropped_pairs_upper_bound"],
+                         rows_in=r["block_size"], rows_out=r["n_salt"])
+            for r in oversize.collect()
+        ])
+        return blocks
+
+    blocks = out["blocks"] = _run_stage("block", build_block)
 
     # --- pair ---
-    if _stage_done(cfg, "pair"):
-        pairs = spark.read.parquet(_stage_path(cfg, "pair"))
-    else:
-        pairs = candidate_pairs_stage(blocks)
-        pairs = _commit_stage(spark, cfg, "pair", pairs)
-        pump.submit(lambda df=pairs: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "pair")))
-    out["pairs"] = pairs
-    mark("pair")
+    pairs = out["pairs"] = _run_stage("pair", lambda: candidate_pairs_stage(blocks))
 
-    # --- score ---
-    if _stage_done(cfg, "score"):
-        scored = spark.read.parquet(_stage_path(cfg, "score"))
-    else:
-        scored = scored_pairs_stage(
-            attach_pair_features(pairs, signatures), cfg.threshold
-        )
+    # --- score (the histogram is observed on the commit write) ---
+    def build_score() -> DataFrame:
+        scored = scored_pairs_stage(attach_pair_features(pairs, signatures), cfg.threshold)
         if cfg.checkpoint_dir is None:
-            scored = scored.persist()
-        scored = _commit_stage(spark, cfg, "score", scored)
-        if cfg.checkpoint_dir is not None:
-            pump.submit(lambda df=scored: _append_metrics(
-                cfg, _score_histogram_metrics(df, cfg.run_id)))
-    out["scored_pairs"] = scored
-    mark("score")
+            return scored
+        hist = Observation()
+        score_bin = f"least(floor(pair_score * {_SCORE_BINS}), {_SCORE_BINS - 1})"
+        bins = ", ".join(f"count_if({score_bin} = {i})" for i in range(_SCORE_BINS))
+
+        def score_row() -> list[tuple]:
+            counts = list(hist.get["bins"])
+            return [_lineage_row(cfg, "score", pair_count=sum(counts),
+                                 score_histogram=counts, rows_out=sum(counts))]
+
+        later.append(score_row)
+        return scored.observe(hist, F.expr(f"array({bins})").alias("bins"))
+
+    scored = out["scored_pairs"] = _run_stage("score", build_score)
 
     # --- cluster + publish ---
-    accepted = scored.where(F.col("accepted"))
-    if _stage_done(cfg, "cluster_groups") and _stage_done(cfg, "cluster_members"):
-        clusters = spark.read.parquet(_stage_path(cfg, "cluster_groups"))
-        members = spark.read.parquet(_stage_path(cfg, "cluster_members"))
-    else:
+    @functools.cache
+    def cluster_tables() -> tuple[DataFrame, DataFrame]:
         from yams_spark.operators.clustering import DRIVER_CC_MAX_EDGES
 
-        cc_stats: dict = {}
-        clusters, members = clusters_stage(
-            signatures, accepted, cfg.threshold, cfg.strategy,
+        out["cc_stats"] = {}
+        return clusters_stage(
+            signatures, scored.where(F.col("accepted")), cfg.threshold, cfg.strategy,
             max_component_docs=cfg.max_component_docs,
             driver_cc_max_edges=(
-                DRIVER_CC_MAX_EDGES
-                if cfg.driver_cc_max_edges < 0
-                else cfg.driver_cc_max_edges
+                DRIVER_CC_MAX_EDGES if cfg.driver_cc_max_edges < 0 else cfg.driver_cc_max_edges
             ),
-            cc_stats=cc_stats,
+            cc_stats=out["cc_stats"],
         )
-        out["cc_stats"] = cc_stats
-        clusters = _commit_stage(spark, cfg, "cluster_groups", clusters)
-        members = _commit_stage(spark, cfg, "cluster_members", members)
-        pump.submit(lambda df=clusters: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "cluster_groups")))
-        pump.submit(lambda df=members: _append_metrics(
-            cfg, _partition_metrics(df, cfg.run_id, "cluster_members")))
-        if cfg.max_component_docs is not None and cfg.checkpoint_dir is not None:
-            # lineage: one row per split parent component (labels look like
-            # "<component>#<i>"), rows_out = sub-clusters it produced
-            split_rows = (
-                clusters.where(F.col("component").contains("#"))
-                .withColumn("parent", F.substring_index("component", "#", 1))
-                .groupBy("parent")
-                .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
-                .select(
-                    F.lit(cfg.run_id).alias("run_id"),
-                    F.lit("cluster_split").alias("stage"),
-                    F.lit(-1).alias("partition_id"),
-                    F.col("parent").alias("block_id"),
-                    F.lit(None).cast("long").alias("pair_count"),
-                    F.lit(None).cast("array<long>").alias("score_histogram"),
-                    F.col("n_docs").cast("long").alias("rows_in"),
-                    F.col("n_sub").cast("long").alias("rows_out"),
-                    F.current_timestamp().alias("watermark_ts"),
-                )
-            )
-            pump.submit(lambda df=split_rows: _append_metrics(cfg, df))
-    out["clusters"] = clusters
-    out["members"] = members
-    mark("cluster")
 
-    pump.close()
+    def build_groups() -> DataFrame:
+        if cfg.max_component_docs is not None:
+            # one row per split parent component (labels look like
+            # "<component>#<i>"), rows_out = sub-clusters it produced
+            later.append(lambda: [
+                _lineage_row(cfg, "cluster_split", block_id=r["parent"],
+                             rows_in=r["n_docs"], rows_out=r["n_sub"])
+                for r in spark.read.parquet(_stage_path(cfg, "cluster_groups"))
+                .where(F.col("component").contains("#"))
+                .groupBy(F.substring_index("component", "#", 1).alias("parent"))
+                .agg(F.count("*").alias("n_sub"), F.sum("member_count").alias("n_docs"))
+                .collect()
+            ])
+        return cluster_tables()[0]
+
+    out["clusters"] = _run_stage("cluster_groups", build_groups)
+    out["members"] = _run_stage("cluster_members", lambda: cluster_tables()[1])
+
     if cfg.checkpoint_dir is not None:
-        out["metrics"] = spark.read.parquet(
-            os.path.join(cfg.checkpoint_dir, "metrics.parquet")
-        )
+        lineage.extend(row for rows in later for row in rows())
+        metrics_path = os.path.join(cfg.checkpoint_dir, "metrics.parquet")
+        if lineage or not os.path.exists(metrics_path):
+            _append_lineage(metrics_path, lineage)
+        out["metrics"] = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
     return out
